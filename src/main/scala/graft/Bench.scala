@@ -148,11 +148,16 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a crashing row is left out of `total`, so a run with failures must
+    // say so: otherwise it reads as a faster run
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val failedNames = failed.map(k => "\"" + k + "\"").mkString("[", ",", "]")
+    val failedFields = s""""n_failed":${failed.size},"failed":$failedNames"""
     // Field order matters operationally: the harness records only the tail of
     // stdout, and with 230+ per-query entries the line is ~6KB. Putting the
     // bulky `queries` map FIRST keeps metric/value/unit/sf inside the
     // captured tail (JSON object key order is semantically irrelevant).
-    val fullLine = s"""{"queries":$qs,"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"}}"""
+    val fullLine = s"""{"queries":$qs,"metric":"total","value":$total,"unit":"sec",$failedFields,"sf":"$sfDir","loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"}}"""
     println(fullLine)
     // The ~12KB line above overflows the harness's stdout tail-capture (two
     // rounds of BENCH_r*.json carried parsed:null — the tail kept only the
@@ -164,7 +169,7 @@ object Bench {
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.writeString(p, fullLine + "\n")
     } catch { case _: Throwable => () } // best-effort: cwd may not be the repo
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":"$cpus","n_queries":${results.size},"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":"$cpus","n_queries":${results.size},$failedFields,"loadavg_before":"$loadBefore","cooldown":"$cooldownStatus","cooldown_waited_sec":${f"$cooldownWaitedSec%.1f"},"queries_file":"docs/bench_last.json"}""")
     spark.stop()
   }
 }

@@ -424,11 +424,25 @@ object Algorithms {
     * (RecallSpec): with r = numHashes/bands hashes per band, a true pair at
     * similarity s collides with prob 1-(1-s^r)^bands — size bands/r for the
     * similarity regime the caller cares about (the defaults catch s ≥ 0.5
-    * with ≥ 99.99% per-pair probability at r=2, bands=32). */
+    * with ≥ 99.99% per-pair probability at r=2, bands=32).
+    *
+    * Small inputs route to the in-task kernel
+    * ([[LocalKernels.jaccardSimilarityApprox]]: the same murmur3
+    * signatures and band buckets over a CSR, identical rows); the
+    * aggregate + banded self-join below is the at-scale path. */
   def jaccardSimilarityApprox(edges: DataFrame, numHashes: Int = 64,
                               bands: Int = 32,
                               threshold: Double = 0.3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
+    val (e, small) = LocalKernels.gate(
+      edges.select(col("src").cast("long"), col("dst").cast("long")))
+    if (small) LocalKernels.jaccardSimilarityApprox(e, numHashes, bands, threshold)
+    else jaccardSimilarityApproxDistributed(e, numHashes, bands, threshold)
+  }
+
+  private[graft] def jaccardSimilarityApproxDistributed(edges: DataFrame, numHashes: Int,
+                                                        bands: Int,
+                                                        threshold: Double): DataFrame = {
     // NO .distinct() on the symmetrized stream (guide §2.4 — a dedup
     // exchange on data feeding an idempotent aggregate is a pure extra
     // shuffle): every signature entry is a min(hash(i, b)), and min is
@@ -1524,11 +1538,24 @@ object Algorithms {
     * collapsed on co-purchase hubs; the join form is linear in candidate
     * count and lets Catalyst pick the join strategy. Walk state never
     * materializes paths. Step 1 has no `prev`, so it is the first-order
-    * pick. Returns (start, v1..vSteps). */
+    * pick. Returns (start, v1..vSteps).
+    *
+    * Small inputs route to the in-task kernel
+    * ([[LocalKernels.node2vecWalks]]: the same walks over a sorted CSR,
+    * identical rows, one task instead of ~10 stages); the dataflow
+    * described above is the at-scale path. */
   def node2vecWalks(edges: DataFrame, steps: Int,
                     wBack: Int = 1, wCommon: Int = 4, wFar: Int = 2): DataFrame = {
     require(steps >= 1 && steps <= 16, s"steps in [1,16], got $steps")
     require(wBack > 0 && wCommon > 0 && wFar > 0, "weights must be positive")
+    val (e, small) = LocalKernels.gate(
+      edges.select(col("src").cast("long"), col("dst").cast("long")))
+    if (small) LocalKernels.node2vecWalks(e, steps, wBack, wCommon, wFar)
+    else node2vecWalksDistributed(e, steps, wBack, wCommon, wFar)
+  }
+
+  private[graft] def node2vecWalksDistributed(edges: DataFrame, steps: Int,
+                                              wBack: Int, wCommon: Int, wFar: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // cast like bidirectionalBfs: int-typed edge inputs would otherwise
     // leak int v1..vN columns and lean on implicit promotion in the draw

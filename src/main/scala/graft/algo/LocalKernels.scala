@@ -24,11 +24,20 @@ import scala.collection.mutable
   * that exists.
   *
   * Every kernel here replicates its distributed twin's OBSERVABLE semantics
-  * bit-for-bit on integer outputs (wcc/cdlp/bfs/mst/varlength) and to
-  * summation-order ULPs on floating outputs (pagerank/sssp — absorbed by
-  * the catalog's 4-6 decimal rounding, same slack the DuckDB oracles rely
-  * on). Differential specs in LocalKernelsSpec enforce this against the
-  * distributed implementations on random graphs.
+  * bit-for-bit on integer outputs (wcc/cdlp/bfs/mst/varlength/node2vec
+  * walks), on MinHash-LSH Jaccard estimates (the same murmur3 signatures
+  * and band buckets, the same one double division) and to summation-order
+  * ULPs on floating outputs (pagerank/sssp — absorbed by the catalog's 4-6
+  * decimal rounding, same slack the DuckDB oracles rely on). Differential
+  * specs in LocalKernelsSpec enforce this against the distributed
+  * implementations on random graphs.
+  *
+  * Routes: the [[Algorithms]] entry points pageRank, pageRankWeighted,
+  * personalizedPageRank, hits, wcc, cdlp, scc, kCore, bfs, sssp, ssspPath,
+  * bidirectionalBfs, harmonic/closeness/betweenness centrality, louvain,
+  * louvainMoves, mst, node2vecWalks and jaccardSimilarityApprox consult
+  * [[gate]]; triangleCount and lcc consult [[gateSuperlinear]]; the
+  * variable-length expansions in `graft.operators.Traversals` route here too.
   */
 object LocalKernels {
 
@@ -999,20 +1008,195 @@ object LocalKernels {
         pd.groupBy(_._1).toSeq.sortBy(_._1).iterator.flatMap { case (s, grp) =>
           val degenerate = grp.collect { case (a, b) if a == b => (a, b, 0L) }
           val targets = grp.collect { case (a, b) if a != b => b }
+          // resolve targets first: a source none of whose targets is in
+          // the graph answers nothing and pays no traversal
+          val ts = targets.flatMap(t => vx.idOf.get(t).map(t -> _))
           val resolved = vx.idOf.get(s) match {
-            case Some(si) if targets.nonEmpty =>
+            case Some(si) if ts.nonEmpty =>
               val (dist, _) = bfsFrom(si, n, off, tgt, maxDepth)
-              targets.flatMap { t =>
-                vx.idOf.get(t) match {
-                  case Some(ti) if dist(ti) >= 0 => Seq((s, t, dist(ti).toLong))
-                  case _ => Nil
-                }
-              }
+              ts.collect { case (t, ti) if dist(ti) >= 0 => (s, t, dist(ti).toLong) }
             case _ => Nil
           }
           degenerate.iterator ++ resolved.iterator
         }
       }.toDF("src", "dst", "dist")
+  }
+
+  /** Edges without self-loops, re-indexed by id RANK: returns (ids
+    * ascending, src index, dst index), so index order is id order. */
+  private def rankedEdges(it: Iterator[(Long, Long)]): (Array[Long], Array[Int], Array[Int]) = {
+    val ab = new Longs(); val bb = new Longs()
+    it.foreach { case (a, b) => if (a != b) { ab += a; bb += b } }
+    val as = ab.toArray; val bs = bb.toArray
+    val ids = uniqueSorted(as ++ bs)
+    val si = new Array[Int](as.length); val di = new Array[Int](as.length)
+    var k = 0
+    while (k < as.length) {
+      si(k) = java.util.Arrays.binarySearch(ids, as(k))
+      di(k) = java.util.Arrays.binarySearch(ids, bs(k))
+      k += 1
+    }
+    (ids, si, di)
+  }
+
+  /** In-task twin of [[Algorithms.node2vecWalksDistributed]], row for row:
+    * symmetrized, self-loop-free, deduped adjacency with neighbors in
+    * ascending id order; one walker per vertex that has a neighbor. Step 1
+    * picks `nbrs(pmod(draw(1), deg))`; step i ≥ 2 weighs cur's neighbors
+    * `wBack` (prev), `wCommon` (a neighbor of prev — binary search in
+    * prev's sorted list) or `wFar`, and picks the first whose cumulative
+    * weight exceeds `pmod(draw(i), total)`. `draw(i) = (v % 100000) *
+    * 2654435761 + i * 40503` on the current vertex id, the twin's long
+    * arithmetic. Returns (start, v1..vSteps). */
+  def node2vecWalks(edges: DataFrame, steps: Int,
+                    wBack: Int, wCommon: Int, wFar: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
+    val schema = StructType(("start" +: (1 to steps).map(i => s"v$i"))
+      .map(StructField(_, LongType, nullable = false)))
+    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
+      val (ids, si, di) = rankedEdges(it)
+      val n = ids.length
+      // unique canonical (lo, hi) keys in sorted order: pairCsr's stable
+      // fill then lists each vertex's lower neighbors before its higher
+      // ones, both ascending — every neighbor list comes out sorted
+      val keys = new Array[Long](si.length)
+      var e = 0
+      while (e < si.length) {
+        keys(e) = (math.min(si(e), di(e)).toLong << 32) | math.max(si(e), di(e))
+        e += 1
+      }
+      val (off, nbr) = pairCsr(n, uniqueSorted(keys))
+      var maxDeg = 0
+      var v = 0
+      while (v < n) { maxDeg = math.max(maxDeg, off(v + 1) - off(v)); v += 1 }
+      val wt = new Array[Long](maxDeg)
+      def draw(id: Long, i: Int): Long = (id % 100000L) * 2654435761L + i.toLong * 40503L
+      Iterator.range(0, n).map { s =>
+        val walk = new Array[Any](steps + 1)
+        walk(0) = ids(s)
+        var prev = s
+        var cur = nbr(off(s) + java.lang.Math.floorMod(draw(ids(s), 1),
+          (off(s + 1) - off(s)).toLong).toInt)
+        walk(1) = ids(cur)
+        var i = 2
+        while (i <= steps) {
+          val lo = off(cur); val hi = off(cur + 1)
+          var total = 0L
+          var k = lo
+          while (k < hi) {
+            val c = nbr(k)
+            wt(k - lo) =
+              if (c == prev) wBack.toLong
+              else if (java.util.Arrays.binarySearch(nbr, off(prev), off(prev + 1), c) >= 0)
+                wCommon.toLong
+              else wFar.toLong
+            total += wt(k - lo)
+            k += 1
+          }
+          val r = java.lang.Math.floorMod(draw(ids(cur), i), total)
+          var cum = wt(0)
+          k = lo
+          while (cum <= r) { k += 1; cum += wt(k - lo) }
+          prev = cur; cur = nbr(k)
+          walk(i) = ids(cur)
+          i += 1
+        }
+        Row.fromSeq(walk.toSeq)
+      }
+    }(org.apache.spark.sql.Encoders.row(schema)).toDF()
+  }
+
+  /** In-task twin of [[Algorithms.jaccardSimilarityApproxDistributed]],
+    * row for row. Signature entry i of vertex v is the min, over v's
+    * symmetrized self-loop-free neighbors b, of Spark's `hash(i, b)`
+    * (Murmur3 x86_32, seed 42, the int then the long); min is
+    * duplicate-insensitive, so edges are not deduped. Band b's bucket is
+    * Spark's `hash(slice(sig, b*r+1, r), b)` — hash collisions yield the
+    * twin's candidates. A pair x < y is scored once, at the first band
+    * whose buckets it shares: est_jaccard = agreeing positions /
+    * numHashes, kept when ≥ threshold. Returns (x, y, est_jaccard). */
+  def jaccardSimilarityApprox(edges: DataFrame, numHashes: Int, bands: Int,
+                              threshold: Double): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    import org.apache.spark.unsafe.hash.Murmur3_x86_32.{hashInt, hashLong}
+    val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
+    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
+      val (ids, si, di) = rankedEdges(it)
+      val n = ids.length; val h = numHashes; val r = numHashes / bands
+      // hash(i, id) per vertex, computed once however many edges touch it
+      val seeds = Array.tabulate(h)(hashInt(_, 42))
+      val hv = new Array[Int](n * h)
+      var v = 0
+      while (v < n) {
+        var i = 0
+        while (i < h) { hv(v * h + i) = hashLong(ids(v), seeds(i)); i += 1 }
+        v += 1
+      }
+      val sig = Array.fill(n * h)(Int.MaxValue)
+      def minInto(doc: Int, b: Int): Unit = {
+        var i = 0
+        while (i < h) {
+          val x = hv(b * h + i)
+          if (x < sig(doc * h + i)) sig(doc * h + i) = x
+          i += 1
+        }
+      }
+      var k = 0
+      while (k < si.length) { minInto(si(k), di(k)); minInto(di(k), si(k)); k += 1 }
+      val bk = new Array[Int](n * bands)
+      v = 0
+      while (v < n) {
+        var b = 0
+        while (b < bands) {
+          var x = 42
+          var j = b * r
+          while (j < b * r + r) { x = hashInt(sig(v * h + j), x); j += 1 }
+          bk(v * bands + b) = hashInt(b, x)
+          b += 1
+        }
+        v += 1
+      }
+      val out = mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      val keys = new Array[Long](n)
+      var b = 0
+      while (b < bands) {
+        v = 0
+        while (v < n) { keys(v) = (bk(v * bands + b).toLong << 32) | v; v += 1 }
+        java.util.Arrays.sort(keys)
+        var p = 0
+        while (p < n) {
+          var q = p + 1
+          while (q < n && (keys(q) >>> 32) == (keys(p) >>> 32)) q += 1
+          // keys(p until q) share band b's bucket, indices ascending
+          var a = p
+          while (a < q) {
+            val x = keys(a).toInt
+            var c = a + 1
+            while (c < q) {
+              val y = keys(c).toInt
+              var e = 0
+              while (e < b && bk(x * bands + e) != bk(y * bands + e)) e += 1
+              if (e == b) {
+                var agree = 0; var i = 0
+                while (i < h) { if (sig(x * h + i) == sig(y * h + i)) agree += 1; i += 1 }
+                val est = agree.toDouble / numHashes
+                if (est >= threshold) out += ((ids(x), ids(y), est))
+              }
+              c += 1
+            }
+            a += 1
+          }
+          p = q
+        }
+        b += 1
+      }
+      out.iterator
+    }.toDF("x", "y", "est_jaccard")
   }
 
   /** Synchronous (round-based) Bellman-Ford, `maxIter` rounds or fixpoint —

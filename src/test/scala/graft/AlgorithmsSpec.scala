@@ -9,6 +9,16 @@ import org.apache.spark.sql.functions._
 class AlgorithmsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Runs `check` on the gated route (in-task kernel for these tiny
+    * inputs), then with the kernels pinned off, so the distributed form
+    * keeps its oracle coverage too. */
+  private def onBothRoutes(check: String => Unit): Unit = {
+    check("gated")
+    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    try check("distributed")
+    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+  }
+
   test("wcc: two components get min-id labels") {
     // comp A: 1-2-3 ; comp B: 10-11
     val e = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
@@ -123,15 +133,17 @@ class AlgorithmsSpec extends SparkSpec {
       inter = (adj(i) & adj(j)).size if inter > 0
       if inter.toDouble / (adj(i) | adj(j)).size >= 0.5
     } yield (i, j)
-    val cand = Algorithms.jaccardSimilarityApprox(
-        edges.toDF("src", "dst"), 64, 32, 0.25)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rec = exact.count(cand.contains).toDouble / exact.size
-    info(f"approx recall over ${exact.size} exact >=0.5 pairs = $rec%.3f")
-    assert(rec >= 0.9, f"recall $rec%.3f below the 0.9 floor")
-    // every planted hub-twin pair specifically must be recalled
-    (0 until 40).foreach { h =>
-      assert(cand.contains((100L + h, 10000L + h)), s"planted pair for hub $h missed")
+    onBothRoutes { route =>
+      val cand = Algorithms.jaccardSimilarityApprox(
+          edges.toDF("src", "dst"), 64, 32, 0.25)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val rec = exact.count(cand.contains).toDouble / exact.size
+      info(f"$route: approx recall over ${exact.size} exact >=0.5 pairs = $rec%.3f")
+      assert(rec >= 0.9, f"$route: recall $rec%.3f below the 0.9 floor")
+      // every planted hub-twin pair specifically must be recalled
+      (0 until 40).foreach { h =>
+        assert(cand.contains((100L + h, 10000L + h)), s"$route: planted pair for hub $h missed")
+      }
     }
   }
 
@@ -614,10 +626,7 @@ class AlgorithmsSpec extends SparkSpec {
       }
       start +: out
     }
-    val got = Algorithms.node2vecWalks(e, 3).collect()
-      .map(r => (0 until 4).map(r.getLong)).toSet
     val want = Seq(1L, 2L, 3L, 4L).map(s => oracle(s, 3, 1, 4, 2)).toSet
-    assert(got == want, s"got $got want $want")
     // bias sensitivity on a star: from leaf 2, step 2 stands at hub 1 with
     // prev = 2; a huge backtrack weight returns to 2, uniform weights pick
     // a different leaf — the second-order state provably changes the walk
@@ -625,8 +634,13 @@ class AlgorithmsSpec extends SparkSpec {
     def starWalk(wb: Int, wc: Int, wf: Int): Map[Long, Long] =
       Algorithms.node2vecWalks(star, 2, wb, wc, wf).collect()
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(starWalk(1000, 1, 1)(2L) == 2L) // heavy return weight backtracks
-    assert(starWalk(1, 1, 1)(2L) != 2L)    // uniform draw moves on
+    onBothRoutes { route =>
+      val got = Algorithms.node2vecWalks(e, 3).collect()
+        .map(r => (0 until 4).map(r.getLong)).toSet
+      assert(got == want, s"$route: got $got want $want")
+      assert(starWalk(1000, 1, 1)(2L) == 2L, route) // heavy return weight backtracks
+      assert(starWalk(1, 1, 1)(2L) != 2L, route)    // uniform draw moves on
+    }
   }
 
   test("node2vecWalks: hub-heavy graph (one node deg >> rest) matches the naive oracle") {
@@ -661,19 +675,22 @@ class AlgorithmsSpec extends SparkSpec {
       }
       start +: out
     }
-    val got = Algorithms.node2vecWalks(e, 4).collect()
-      .map(r => (0 until 5).map(r.getLong)).toSet
     val want = adjm.keySet.map(s => oracle(s, 4)).toSet
-    assert(got == want)
-    // steps > 4 routes the NARROW loop (no prefix carry, per-step pick
-    // branches + one reassembly aggregate) — pin it against the same naive
-    // oracle AND against the carry form on the shared prefix: the draws
-    // depend only on (step, current node), so walk(6).v1..v4 == walk(4)
-    val got6 = Algorithms.node2vecWalks(e, 6).collect()
-      .map(r => (0 until 7).map(r.getLong)).toSet
     val want6 = adjm.keySet.map(s => oracle(s, 6)).toSet
-    assert(got6 == want6)
-    assert(got6.map(_.take(5)) == got)
+    onBothRoutes { route =>
+      val got = Algorithms.node2vecWalks(e, 4).collect()
+        .map(r => (0 until 5).map(r.getLong)).toSet
+      assert(got == want, route)
+      // distributed, steps > 4 carries the walk prefix as ONE packed `_vs`
+      // array column instead of a column per step — pin it against the
+      // same naive oracle AND against the per-column carry on the shared
+      // prefix: the draws depend only on (step, current node), so
+      // walk(6).v1..v4 == walk(4)
+      val got6 = Algorithms.node2vecWalks(e, 6).collect()
+        .map(r => (0 until 7).map(r.getLong)).toSet
+      assert(got6 == want6, route)
+      assert(got6.map(_.take(5)) == got, route)
+    }
   }
 
   test("bidirectionalBfs: exact distances on a chain, depth cap, disconnection") {

@@ -34,6 +34,14 @@ class LocalKernelsSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Array[String] =
     df.collect().map(_.toString).sorted
 
+  /** Rows of `f` with the local path disabled, so a gated entry point
+    * runs its distributed twin. */
+  private def distributed(f: => DataFrame): Array[String] = {
+    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
+    try sortedRows(f)
+    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+  }
+
   test("gate: small inputs route local, localSizeBytes=0 pins distributed") {
     val e = randGraph(1, 20, 60)
     assert(LocalKernels.isSmall(e))
@@ -84,13 +92,51 @@ class LocalKernelsSpec extends SparkSpec {
       val ids = e.select(col("src")).unionAll(e.select(col("dst")))
         .distinct().orderBy(col("src")).collect().map(_.getLong(0))
       val pairs = Seq((ids.head, ids.last), (ids.head, ids.head),
-        (ids(1), ids(ids.length / 2)), (ids.head, 999999L)) // absent endpoint
+        (ids(1), ids(ids.length / 2)), (ids.head, 999999L), // absent endpoint
+        (ids(2), 999998L), (ids(2), 999997L)) // present source, every target absent
       for (depth <- Seq(2, 5)) {
         val loc = sortedRows(LocalKernels.bidirBfs(e, pairs, depth))
         spark.conf.set("spark.graft.algo.localSizeBytes", "0")
         val dist = try sortedRows(Algorithms.bidirectionalBfs(e, pairs, depth))
         finally spark.conf.unset("spark.graft.algo.localSizeBytes")
         assert(loc.toSeq == dist.toSeq, s"seed $seed depth $depth")
+      }
+    }
+  }
+
+  test("node2vecWalks local == distributed, identical rows (self-loops, parallel edges, hub, int ids)") {
+    // celebrity hub 1 over leaves 2..61 plus a leaf ring: every weight
+    // class fires from the hub
+    val hub = ((2L to 61L).map(l => (1L, l)) ++ (2L until 61L).map(l => (l, l + 1)))
+      .toDF("src", "dst")
+    val graphs = Seq(
+      "random" -> randGraph(41, 30, 120), // self-loops and parallel edges
+      "sparse" -> randGraph(42, 50, 70),
+      "hub" -> hub,
+      "int" -> randGraph(43, 25, 90).select(col("src").cast("int"), col("dst").cast("int")))
+    // 4 is the last step count with a column per step (the twin's
+    // carryPrefix); 5 and 8 carry the packed prefix array
+    for ((name, e) <- graphs; steps <- Seq(1, 3, 4, 5, 8)) {
+      val loc = sortedRows(LocalKernels.node2vecWalks(e, steps, 1, 4, 2))
+      assert(loc.nonEmpty, s"$name steps $steps")
+      assert(loc === distributed(Algorithms.node2vecWalks(e, steps)), s"$name steps $steps")
+    }
+    val e = randGraph(44, 30, 120)
+    for (steps <- Seq(3, 5))
+      assert(sortedRows(LocalKernels.node2vecWalks(e, steps, 5, 1, 3)) ===
+        distributed(Algorithms.node2vecWalks(e, steps, 5, 1, 3)), s"weights (5,1,3) steps $steps")
+  }
+
+  test("jaccardSimilarityApprox local == distributed, identical rows (duplicate + reversed edges)") {
+    for ((seed, n, m) <- Seq((51L, 12, 60), (52L, 40, 160))) {
+      val g = randGraph(seed, n, m)
+      // every edge also reversed and repeated: signatures must not move
+      val e = g.unionAll(g.select(col("dst").as("src"), col("src").as("dst"))).unionAll(g)
+      for ((hashes, bands) <- Seq((64, 32), (32, 8)); threshold <- Seq(0.1, 0.3)) {
+        val loc = sortedRows(LocalKernels.jaccardSimilarityApprox(e, hashes, bands, threshold))
+        assert(loc.nonEmpty, s"seed $seed ($hashes, $bands) >= $threshold")
+        assert(loc === distributed(Algorithms.jaccardSimilarityApprox(e, hashes, bands, threshold)),
+          s"seed $seed ($hashes, $bands) >= $threshold")
       }
     }
   }
@@ -351,11 +397,12 @@ class LocalKernelsSpec extends SparkSpec {
 
   test("public entry points route through the gate and stay correct") {
     val e = randGraph(16, 30, 60)
+    assert(LocalKernels.isSmall(e))
     // public call (small → local) equals the pinned-distributed run
-    val viaGate = sortedRows(Algorithms.wcc(e))
-    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-    try assert(viaGate === sortedRows(Algorithms.wcc(e)))
-    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
+    def same(f: => DataFrame): Unit = assert(sortedRows(f) === distributed(f))
+    same(Algorithms.wcc(e))
+    same(Algorithms.node2vecWalks(e, 3))
+    same(Algorithms.jaccardSimilarityApprox(e, 64, 32, 0.2))
   }
 
   test("resident cache: file-backed kernels hit the cache and match cold runs") {
@@ -367,13 +414,6 @@ class LocalKernelsSpec extends SparkSpec {
       randGraph(77, 40, 200).write.mode("overwrite").parquet(s"$dir/e.parquet")
       val e = spark.read.parquet(s"$dir/e.parquet")
       val starts = e.select(col("src").as("s0")).distinct().limit(5)
-      // distributed references, pinned so the gate cannot route them back
-      // to the (cached) local kernels
-      def distributed(f: => DataFrame): Array[String] = {
-        spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-        try sortedRows(f)
-        finally spark.conf.unset("spark.graft.algo.localSizeBytes")
-      }
       def runs(f: => DataFrame): (Array[String], Array[String]) =
         (sortedRows(f), sortedRows(f))
       val (b1, b2) = runs(LocalKernels.bfs(e, 1000L, 30))
@@ -385,6 +425,12 @@ class LocalKernelsSpec extends SparkSpec {
         Traversals.varLengthExpandDistributed(e, starts, "s0", 1, 3)))
       val (p1, p2) = runs(LocalKernels.varLengthExpandPaths(e, starts, "s0", 1, 2))
       assert(p1 === p2)
+      val (n1, n2) = runs(LocalKernels.node2vecWalks(e, 3, 1, 4, 2))
+      assert(n1 === n2)
+      assert(n1 === distributed(graft.algo.Algorithms.node2vecWalks(e, 3)))
+      val (j1, j2) = runs(LocalKernels.jaccardSimilarityApprox(e, 64, 32, 0.1))
+      assert(j1 === j2)
+      assert(j1 === distributed(graft.algo.Algorithms.jaccardSimilarityApprox(e, 64, 32, 0.1)))
       val (w1, w2) = runs(LocalKernels.wcc(e))
       assert(w1 === w2)
       assert(w1 === distributed(graft.algo.Algorithms.wcc(e)))
