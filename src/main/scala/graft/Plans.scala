@@ -52,7 +52,7 @@ object Plans {
       "q_finbench_cr7" -> "FinBench 2-hop transfer chain: both TRANSFER scans read only their relationship directory of the edge MV; the point-anchored side collapses to a broadcast, so the unanchored upstream hop is the only shuffled input",
       "q_substring_dedup" -> "exact substring dedup: k-token windows are a transform+posexplode PROJECTION per doc (no join builds them); corpus-repeated windows are ONE hash aggregate on the window key; span coverage is a distinct-count aggregate after the window-key join - shuffle volume is the window count, never all-pairs",
       "q_embedding_centroid" -> "group-wise renormalized centroids: posexplode then a (group, dim) hash aggregate whose partial_avg runs map-side, so the exchange carries groups x dim cells, not vectors; the per-group norm joins back as a BroadcastHashJoin",
-      "q_ppr" -> "personalized PageRank (distributed twin): the edge relation shuffles ONCE into a checkpointed leaf (LogicalRDD) consumed by every round; per round the only exchanges are vertex-sized (rank join + contrib aggregate) and the dangling mass is a broadcast 1-row aggregate inside the plan - no driver-side value in the loop",
+      "q_ppr" -> "personalized PageRank (distributed route, the shared power iteration with the seed-restart update): the edge relation shuffles ONCE into a checkpointed leaf (LogicalRDD) consumed by every round; per round the only exchanges are vertex-sized (rank join + contrib aggregate) and the dangling mass is a broadcast 1-row aggregate inside the plan - no driver-side value in the loop",
       "q_adamic_adar" -> "seeded Adamic-Adar: the degree cap joins onto the SEEDED s1 side BEFORE the wedge join, so over-cap hubs never materialize fan-out rows; the seed filter is an isin pushed at the symmetrized-edge leaf and the final top-k is TakeOrderedAndProject",
       "q_dsir_resample" -> "DSIR importance resampling: hashed n-gram features are a per-row transform+explode; the bucket LM collapses to <=4096 rows in ONE hash aggregate and returns as a BroadcastHashJoin onto the feature stream; the Gumbel top-k threshold is TakeOrderedAndProject + a broadcast 1-row aggregate - no global window or sort anywhere",
       "q_pack_harmonic" -> "harmonic no-split packing: one scan computes (n_tokens, fit-class); the only exchange feeds windows PARTITIONED BY (shard, class) - parallelism shards x classes, nothing global",
@@ -64,7 +64,7 @@ object Plans {
       "q_semdedup" -> "SemDeDup: every Lloyd assignment is a BroadcastNestedLoopJoin of the k x dim centroid table against the vector scan reduced by ONE struct-max hash aggregate (no per-vector window); the update is the posexplode (cluster, dim) aggregate; the in-cluster pair join shuffles on the cluster id only",
       "q_nb_quality" -> "naive-Bayes quality: one explode + hash aggregate trains the token log-odds as a DISTRIBUTED table; class totals and the prior are broadcast 1-row aggregates; scoring re-joins the exploded token stream on the token key - shuffle ~ token count, model never on the driver",
       "q_weighted_sample" -> "Efraimidis-Spirakis weighted sampling: key = ln(u)/w as a codegen'd projection; the k-th composite key is TakeOrderedAndProject + a broadcast 1-row max - selection never becomes a global sort or window",
-      "q_pagerank_weighted" -> "weighted PageRank: the multiplicity-weighted co-purchase MV is a parquet leaf; per round one vertex-sized rank-join-outweight cut feeds both the dangling broadcast aggregate and the contribution join - same audited shape as the unweighted twin",
+      "q_pagerank_weighted" -> "weighted PageRank: the multiplicity-weighted co-purchase MV is a parquet leaf; per round one vertex-sized rank-join-outweight cut feeds both the dangling broadcast aggregate and the contribution join - the same power iteration as q_pagerank with a weight column on the edge leaf",
       "q_skew_report" -> "key-skew report: ONE map-side-combined count aggregate, a broadcast 1-row total, TakeOrderedAndProject for the top-k; the rank window sees only the k survivors",
       "q_pipeline_e2e" -> "composed corpus-prep chain: gate/cluster/keep-best/split/sample fuse into ONE plan - the near-dup pair MV is a parquet leaf consumed once, the ES sample threshold is TakeOrdered + broadcast 1-row max, no driver round-trips between stages",
       "q_hits" -> "HITS hubs & authorities: the deduped directed edge set is ONE checkpointed leaf (LogicalRDD); normalization is DEFERRED out of the loop (the L1 scalars cancel through the linear half-steps), so each round is ONE plan - auth sums feeding hub sums, two joins + two hash aggregates, no normalizer joins or scalar broadcasts - ending in one vertex-sized checkpoint; the single end-of-loop divide is a broadcast 1-row sum",
@@ -73,7 +73,7 @@ object Plans {
       "q_heavy_hitters" -> "two-pass Misra-Gries: pass 1 is one mapPartitions over the token scan (bounded k-counter state, NO exchange before it); the only shuffles are the candidate distinct and the pass-2 recount whose aggregate is semi-join-pruned to <= k*partitions keys - the full token cardinality never crosses the wire",
       "q_jaccard_approx" -> "MinHash-over-neighbor-sets: ONE hash aggregate builds all 64 signature minima; the banded candidate join is a self-join on (band, bucket) hash keys - bucket-bounded, never all-pairs; the planted-truth semi-join broadcasts the small truth side",
       "q_neighbor_sample" -> "GraphSAGE fanout: per-src PARTITIONED windows (exchange on src, never a global sort); layer 2's edge scan is semi-join-pruned by the sampled layer-1 frontier before its window",
-      "q_louvain_moves" -> "Louvain local moves: per round ONE community-degree hash aggregate + ONE map-side-combined neighbor-community count + a struct-max argmax; each round ends in a checkpointed vertex-sized leaf (LogicalRDD) - no windows over the graph, no driver value in the loop",
+      "q_louvain_moves" -> "Louvain local moves (level 1 of the one move loop, unit weights): per round ONE community-degree hash aggregate + ONE map-side-combined neighbor-community weight sum + a struct-max argmax; each round ends in a checkpointed vertex-sized leaf (LogicalRDD) - no windows over the graph, no driver value in the loop",
       "q_node2vec_walks" -> "node2vec biased walks: adjacency lists aggregate ONCE (checkpointed leaf); per hop the candidate list explodes as a projection (sum deg rows, never deg^2 in-task work), the common-neighbor mark is an ordinary hash join against the edge leaf on (prev, candidate), and the weighted pick is a window PARTITIONED BY the walker - one exchange on the walker key, nothing global, a partition = one walker's candidate list (<= max degree, the same bound an aggregate buffer would hold); the r15 A/B measured the collect_list+aggregate-HOF alternative 5x slower, so the window IS the optimized form here",
       "q_bidir_bfs" -> "bidirectional BFS: each round expands BOTH (pair, side) frontiers with one join against the checkpointed edge leaf + an anti-join against visited - frontier depth is HALF the search depth per side; the meet is one visited-x-visited hash join + min aggregate, all pairs ride the same per-round job",
       "q_paragraph_dedup" -> "CCNet paragraph dedup: paragraphs are a transform+posexplode PROJECTION; the first-occurrence election is ONE min(struct) aggregate (SortAggregate - struct min is not hash-aggregable - but the PARTIAL combine still runs map-side, so the exchange is bounded by DISTINCT paragraphs and hot boilerplate collapses before it moves); join-back on the paragraph key + one reassembly aggregate - no window over the exploded corpus")
@@ -115,13 +115,13 @@ object Plans {
     // FAILS if any round body contains a Window over the graph, a
     // CartesianProduct, or a BroadcastNestedLoopJoin.
     val roundPicks: Seq[(String, String, String)] = Seq(
-      ("q_pagerank", "pagerank", "one vertex-sized rank-join-outdeg cut feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection"),
+      ("q_pagerank", "pagerank", "the power iteration shared by pagerank, weighted pagerank and ppr: one vertex-sized rank-join-outdeg cut feeds the dangling broadcast 1-row aggregate AND the contribution join; update is a left join + projection"),
       ("q_wcc", "wcc", "one edge-join + min aggregate (nbr minimum), one full-outer vertex merge - both vertex-sized exchanges, edge leaf reused"),
       ("q_cdlp", "cdlp", "one label x edge join + (dst, label) count aggregate, argmax as struct-max hash aggregate - NO window over the graph"),
       ("q_sssp", "sssp", "one dist x edge join + per-dst min aggregate + full-outer merge with least() - Bellman-Ford relaxation round"),
       ("q_hits", "hits", "fused round: hub-sums x edge join + per-dst sum (auth sums) feeding a second edge join + per-src sum (hub sums) - one plan, no normalizer; the L1 divides ride once after the loop"),
-      ("q_louvain_moves", "louvain_moves", "ONE community-degree aggregate + ONE map-side-combined neighbor-community count + struct-max argmax - no windows, no driver value"),
-      ("q_louvain_levels", "louvain_weighted", "same shape as louvain_moves with weight sums over the CONTRACTED super-node graph (level 2)"))
+      ("q_louvain_moves", "louvain_moves", "the one Louvain move loop at level 1 (deduped pairs, unit weights): ONE community-degree aggregate + ONE map-side-combined neighbor-community weight sum + struct-max argmax - no windows, no driver value"),
+      ("q_louvain_levels", "louvain_weighted", "the same move loop as louvain_moves over the CONTRACTED super-node graph (level 2): pair-count weights, self-loops in the degree"))
     sb.append("\n# Round bodies — iterative kernels, round 2 pre-checkpoint\n\n")
     sb.append("Captured via graft.algo.RoundCapture while the catalog query " +
       "builds its (eagerly checkpointing) loop; audited here: no Window / " +

@@ -368,9 +368,9 @@ object Soak {
       // Louvain local moves: per round one community-degree aggregate +
       // one map-side-combined neighbor-community count + a struct-max
       // argmax — disjoint copies evolve independently, work ∝ edges/round
-      "louvain_moves" -> { n => Algorithms.louvainMoves(
+      "louvain_moves" -> { n => Algorithms.louvain(
         spark.read.parquet(edgeCache(n, false))
-          .select(col("src").as("a"), col("dst").as("b")), 2).count() },
+          .select(col("src").as("a"), col("dst").as("b")), 2, 1).count() },
       // multi-level Louvain: level 1 as above, then ONE contraction
       // (edge-set aggregate) + weighted moves over the (much smaller)
       // super-node graph + the map-back join — work stays ∝ edges/round

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -20,9 +20,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Algorithms {
 
-  /** Observability for the fixpoint early-exit specs ONLY: the round index
-    * the most recent louvainMoves*Distributed call last executed (< its
-    * `rounds` argument exactly when the two-no-move-round fixpoint fired).
+  /** Observability for the fixpoint early-exit specs ONLY: the last round
+    * the most recent distributed Louvain move loop executed (< its
+    * `rounds` argument exactly when the two-no-move-round fixpoint fired;
+    * for a multi-level call, the last level's loop).
     * Plain volatile — specs run their assertions single-threaded. */
   @volatile private[graft] var lastLouvainMoveRounds: Int = 0
 
@@ -69,7 +70,7 @@ object Algorithms {
     * standard damped power iteration with dangling-mass redistribution.
     * Returns (id, rank). Small inputs route to the in-task kernel
     * ([[LocalKernels]]) — one job instead of ~2 per iteration; the
-    * distributed loop below is the at-scale path. */
+    * distributed loop ([[powerIteration]]) is the at-scale path. */
   def pageRank(edges: DataFrame, iterations: Int = 20, damping: Double = 0.85): DataFrame = {
     val (e, small) = LocalKernels.gate(edges)
     if (small) LocalKernels.pageRank(e, iterations, damping)
@@ -77,51 +78,74 @@ object Algorithms {
   }
 
   private[graft] def pageRankDistributed(edges: DataFrame, iterations: Int = 20,
-                                         damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    // hash-partition the edge table by join key ONCE (iterations reuse the
-    // partitioning), and cut it to a LEAF with an eager localCheckpoint
-    // (LogicalRDD keeps the partitioning). persist() would keep the full
-    // lineage inside an InMemoryRelation: every iteration's plan then nests
-    // it several times, and AQE re-stringifies the whole tree per stage
-    // update (regex per node, single-threaded on the driver) — plan-string
-    // building, not execution, became the bottleneck at 8 iterations.
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
-      .repartition(col("_esrc"))
-      .localCheckpoint(true)
+                                         damping: Double = 0.85): DataFrame =
+    powerIteration(edges, None, iterations, n => lit(1.0 / n), globalRank(damping))
+
+  /** Global PageRank's update, `(1-d)/n + d*(recv + dmass/n)`. */
+  private def globalRank(d: Double)(n: Double, recv: Column, dmass: Column): Column =
+    lit((1 - d) / n) + lit(d) * (recv + dmass / n)
+
+  /** The distributed power iteration behind [[pageRank]],
+    * [[pageRankWeighted]] and [[personalizedPageRank]]. A vertex sends
+    * rank·w(e)/W(v) along each out-edge, W(v) its out-weight; with no
+    * `weight` it sends rank/deg(v) — the doubles unit weights would give,
+    * without a weight column. `init(n)` seeds the ranks and
+    * `update(n, recv, dmass)` is the caller's rule, so each variant keeps
+    * its own float association.
+    *
+    * The edge relation hash-partitions by source ONCE and is cut to a
+    * LEAF with an eager localCheckpoint (LogicalRDD keeps the
+    * partitioning). persist() would keep the full lineage inside an
+    * InMemoryRelation: every iteration's plan then nests it several times,
+    * and AQE re-stringifies the whole tree per stage update (regex per
+    * node, single-threaded on the driver) — plan-string building, not
+    * execution, became the bottleneck at 8 iterations. */
+  private def powerIteration(edges: DataFrame, weight: Option[Column], iterations: Int,
+                             init: Double => Column,
+                             update: (Double, Column, Column) => Column): DataFrame = {
+    // weight > 0 enforced by FILTER, not assumption: a null/zero weight
+    // carries no walk probability, so the edge is simply not an edge —
+    // without the filter a null weight nulls rank/W(v) and the sum()
+    // silently LEAKS that vertex's rank mass every iteration (neither
+    // dangling nor contributing)
+    val ends = Seq(col("src").as("_esrc"), col("dst").as("_edst"))
+    val e = weight.fold(edges.select(ends: _*)) { w =>
+        edges.select(ends :+ w.cast("double").as("_ew"): _*).filter(col("_ew") > 0)
+      }.repartition(col("_esrc")).localCheckpoint(true)
     val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
       .distinct().localCheckpoint(true)
     val n = v.count().toDouble
-    val outDeg = e.groupBy(col("_esrc")).agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("_esrc", "_degid").localCheckpoint(true)
-    var ranks = v.withColumn("rank", lit(1.0 / n))
+    val outW = e.groupBy(col("_esrc"))
+      .agg(weight.fold(count(lit(1)))(_ => sum(col("_ew"))).as("_ow"))
+      .withColumnRenamed("_esrc", "_owid").localCheckpoint(true)
+    var ranks = v.withColumn("rank", init(n))
     for (i <- 1 to iterations) {
-      // withDeg feeds BOTH the dangling-mass aggregate and the contribs join —
+      // withW feeds BOTH the dangling-mass aggregate and the contribs join —
       // one eager leaf materialization (vertex-sized, small) instead of
-      // recomputing the rank+degree join twice or persist/unpersist churn.
-      // (Round 5 measured the every-other-round cut here: the doubly-
-      // referenced recompute on uncut rounds costs MORE than the job
-      // boundary it saves — 4.45s vs 3.9s at sf0.1 — so unlike CDLP's
+      // recomputing the rank+out-weight join twice or persist/unpersist
+      // churn. (Round 5 measured the every-other-round cut here: the
+      // doubly-referenced recompute on uncut rounds costs MORE than the
+      // job boundary it saves — 4.45s vs 3.9s at sf0.1 — so unlike CDLP's
       // single-consumer chain, this stays a per-round cut.)
-      val withDeg = ranks.join(outDeg, col("id") === col("_degid"), "left")
-        .select(col("id"), col("rank"), col("deg"))
+      val withW = ranks.join(outW, col("id") === col("_owid"), "left")
+        .select(col("id"), col("rank"), col("_ow"))
         .localCheckpoint(true)
-      // mass of dangling nodes (no out-edges), spread uniformly — computed
-      // INSIDE the plan (broadcast 1-row aggregate), not as a driver action:
-      // one job per iteration instead of three
-      val danglingDf = withDeg.filter(col("deg").isNull)
+      // mass of dangling nodes (no out-edges) — computed INSIDE the plan
+      // (broadcast 1-row aggregate), not as a driver action: one job per
+      // iteration instead of three
+      val danglingDf = withW.filter(col("_ow").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withDeg.filter(col("deg").isNotNull)
-        .select(col("id"), (col("rank") / col("deg")).as("c"))
+      val contribs = withW.filter(col("_ow").isNotNull)
+        .select(col("id"), (col("rank") / col("_ow")).as("_rw"))
         .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("c")).as("recv"))
+        .groupBy(col("_edst"))
+        .agg(sum(weight.fold(col("_rw"))(_ => col("_rw") * col("_ew"))).as("recv"))
         .withColumnRenamed("_edst", "vid")
       ranks = v.join(contribs, col("id") === col("vid"), "left")
         .crossJoin(broadcast(danglingDf))
         .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("recv"), lit(0.0)) + col("_dmass") / n)).as("rank"))
-      // no checkpoint here: the NEXT round's withDeg cut already truncates
+          update(n, coalesce(col("recv"), lit(0.0)), col("_dmass")).as("rank"))
+      // no checkpoint here: the NEXT round's withW cut already truncates
       // lineage once per round — a second per-round materialization of the
       // vertex-sized ranks table is pure checkpoint-write overhead (and at
       // 100x the per-round block writes are the bottleneck, per round-2)
@@ -133,11 +157,9 @@ object Algorithms {
   /** WEIGHTED PageRank (the GDS relationshipWeightProperty variant; the
     * reference's pageRank is unweighted): a vertex distributes its rank
     * over out-edges proportionally to edge weight — contribution =
-    * rank · w(e) / W(v) with W(v) the out-weight sum. Same audited plan
-    * shape as [[pageRankDistributed]]: the weighted edge relation shuffles
-    * ONCE into a checkpointed leaf, each round cuts one vertex-sized
-    * rank⋈out-weight table feeding both the dangling-mass broadcast 1-row
-    * aggregate and the contribution join. Input: (src, dst, weight > 0). */
+    * rank · w(e) / W(v) with W(v) the out-weight sum. Same loop as
+    * [[pageRank]]; edges with weight ≤ 0 or null are dropped. Input:
+    * (src, dst, weight). */
   def pageRankWeighted(edges: DataFrame, iterations: Int = 20,
                        damping: Double = 0.85): DataFrame = {
     // small inputs route in-task like the unweighted twin — the per-round
@@ -149,51 +171,15 @@ object Algorithms {
   }
 
   private[graft] def pageRankWeightedDistributed(edges: DataFrame, iterations: Int = 20,
-                                                 damping: Double = 0.85): DataFrame = {
-    // weight > 0 enforced by FILTER, not assumption: a null/zero weight
-    // carries no walk probability, so the edge is simply not an edge —
-    // without the filter a null weight nulls rank/W(v) and the sum()
-    // silently LEAKS that vertex's rank mass every iteration (neither
-    // dangling nor contributing)
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
-      col("weight").cast("double").as("_ew"))
-      .filter(col("_ew") > 0)
-      .repartition(col("_esrc"))
-      .localCheckpoint(true)
-    val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
-      .distinct().localCheckpoint(true)
-    val n = v.count().toDouble
-    val outW = e.groupBy(col("_esrc")).agg(sum(col("_ew")).as("_ow"))
-      .withColumnRenamed("_esrc", "_owid").localCheckpoint(true)
-    var ranks = v.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      val withW = ranks.join(outW, col("id") === col("_owid"), "left")
-        .select(col("id"), col("rank"), col("_ow"))
-        .localCheckpoint(true)
-      val danglingDf = withW.filter(col("_ow").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withW.filter(col("_ow").isNotNull)
-        .select(col("id"), (col("rank") / col("_ow")).as("_rw"))
-        .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("_rw") * col("_ew")).as("recv"))
-        .withColumnRenamed("_edst", "vid")
-      ranks = v.join(contribs, col("id") === col("vid"), "left")
-        .crossJoin(broadcast(danglingDf))
-        .select(col("id"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("recv"), lit(0.0)) + col("_dmass") / n)).as("rank"))
-    }
-    ranks
-  }
+                                                 damping: Double = 0.85): DataFrame =
+    powerIteration(edges, Some(col("weight")), iterations, n => lit(1.0 / n),
+      globalRank(damping))
 
   /** Personalized PageRank: teleport AND dangling mass return to the SEED
     * set (uniform over seeds) instead of all vertices — the
     * recommendation/similarity variant (beyond parity: the reference ships
-    * only global pageRank). Same per-round shape as
-    * [[pageRankDistributed]]: edges hash-partitioned once and cut to a
-    * leaf, one vertex-sized eager cut per round feeding both the
-    * dangling-mass aggregate and the contribs join, dangling mass as a
-    * broadcast 1-row aggregate inside the plan. Seeds are a k-bounded
+    * only global pageRank). Same loop as [[pageRank]] with the update
+    * `(seed ? (1-d)/ns + d*dmass/ns : 0) + d*recv`. Seeds are a k-bounded
     * literal list (an IN predicate), not a join — callers pass a handful
     * of ids. Fixed iteration count, so a DuckDB oracle unrolls the same
     * rounds as chained CTEs (like pageRank). Small inputs route to the
@@ -214,37 +200,13 @@ object Algorithms {
       edges: DataFrame, seeds0: Seq[Long],
       iterations: Int, damping: Double): DataFrame = {
     val seeds = seeds0.distinct
-    val e = edges.select(col("src").as("_esrc"), col("dst").as("_edst"))
-      .repartition(col("_esrc"))
-      .localCheckpoint(true)
-    val v = e.select(col("_esrc").as("id")).unionAll(e.select(col("_edst").as("id")))
-      .distinct().localCheckpoint(true)
     val ns = seeds.size.toDouble
     def isSeed = col("id").isin(seeds: _*)
-    val outDeg = e.groupBy(col("_esrc")).agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("_esrc", "_degid").localCheckpoint(true)
-    var ranks = v.withColumn("rank",
-      when(isSeed, lit(1.0 / ns)).otherwise(lit(0.0)))
-    for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(outDeg, col("id") === col("_degid"), "left")
-        .select(col("id"), col("rank"), col("deg"))
-        .localCheckpoint(true)
-      val danglingDf = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("_dmass"))
-      val contribs = withDeg.filter(col("deg").isNotNull)
-        .select(col("id"), (col("rank") / col("deg")).as("c"))
-        .join(e, col("id") === col("_esrc"))
-        .groupBy(col("_edst")).agg(sum(col("c")).as("recv"))
-        .withColumnRenamed("_edst", "vid")
-      ranks = v.join(contribs, col("id") === col("vid"), "left")
-        .crossJoin(broadcast(danglingDf))
-        .select(col("id"),
-          (when(isSeed,
-            lit((1 - damping) / ns) + lit(damping) * col("_dmass") / ns)
-            .otherwise(lit(0.0)) +
-            lit(damping) * coalesce(col("recv"), lit(0.0))).as("rank"))
-    }
-    ranks
+    powerIteration(edges, None, iterations,
+      _ => when(isSeed, lit(1.0 / ns)).otherwise(lit(0.0)),
+      (_, recv, dmass) =>
+        when(isSeed, lit((1 - damping) / ns) + lit(damping) * dmass / ns)
+          .otherwise(lit(0.0)) + lit(damping) * recv)
   }
 
   /** Adamic–Adar link-prediction scores for a set of SOURCE vertices:
@@ -579,39 +541,90 @@ object Algorithms {
       .agg(graft.functions.CypherFunctions.roundC(sum(col("q")), 6).as("modularity"))
   }
 
-  /** Louvain-style SYNCHRONOUS local-move rounds (one level): each round
+  /** Multi-LEVEL Louvain (Blondel et al. 2008, the operator people mean
+    * by "Louvain"): local-move rounds, then COARSEN — contract each
+    * community to a super-node, sum parallel edges to weights
+    * (intra-community edges become self-loops), run the same rounds on the
+    * contracted graph — and repeat for `levels` levels; each original node
+    * maps to its top-level community. `levels = 1` is the one-level local
+    * moves. Deterministic end to end (fixed rounds per level, parity
+    * symmetry breaking, min-id tie-breaks), so the DuckDB oracle unrolls
+    * every level.
+    *
+    * Scale shape: contraction is one double-endpoint assignment join +
+    * one hash aggregate over the edge set — the same shape as
+    * [[modularity]]'s intra join — and each level's graph is no larger
+    * (typically far smaller) than the last; no windows over the graph,
+    * no driver state. Beyond-parity: the reference's community surface
+    * is CDLP only (`src/algo/community.rs`). Input: canonical (a, b);
+    * returns (id, community). */
+  def louvain(undirected: DataFrame, rounds: Int, levels: Int): DataFrame = {
+    require(rounds > 0, s"rounds must be positive, got $rounds")
+    require(levels > 0, s"levels must be positive, got $levels")
+    val (e, small) = LocalKernels.gate(undirected.select(col("a"), col("b")))
+    if (small) LocalKernels.louvain(e, rounds, levels)
+    else louvainDistributed(e, rounds, levels)
+  }
+
+  private[graft] def louvainDistributed(undirected: DataFrame, rounds: Int,
+                                        levels: Int): DataFrame = {
+    val und = undirected.select(col("a"), col("b"))
+      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    var asg = louvainRounds(und.withColumn("w", lit(1.0)), rounds, "louvain_moves")
+    for (_ <- 2 to levels) {
+      val g2 = und
+        .join(asg.select(col("id").as("a"), col("community").as("__ca")), Seq("a"))
+        .join(asg.select(col("id").as("b"), col("community").as("__cb")), Seq("b"))
+        .groupBy(least(col("__ca"), col("__cb")).as("a"),
+          greatest(col("__ca"), col("__cb")).as("b"))
+        .agg(count(lit(1)).cast("double").as("w"))
+        .localCheckpoint(true) // consumed by sym, deg's self part, and m2
+      val up = louvainRounds(g2, rounds, "louvain_weighted")
+        .select(col("id").as("__lvl"), col("community").as("__c2"))
+      asg = asg.join(up, asg("community") === up("__lvl"))
+        .select(col("id"), col("__c2").as("community"))
+        .localCheckpoint(true) // consumed by the next contraction + result
+    }
+    asg
+  }
+
+  /** Louvain SYNCHRONOUS local-move rounds over one level's weighted
+    * graph: canonical (a, b, w) pairs, parallel edges pre-merged,
+    * self-loops (a = b) allowed — level 1 is the deduped self-loop-free
+    * pairs with w = 1.0, contracted levels carry pair counts. Each round
     * every node evaluates joining each neighbor community — or staying —
     * by the standard modularity gain k_{v,C} − deg(v)·D′_C/(2m), where
-    * D′_C excludes v itself when C is v's current community, and movers
-    * adopt their argmax (ties to the smaller community id) simultaneously.
+    * k_{v,C} = Σ w to members of C, deg(v) = Σ incident w + 2·selfloop(v)
+    * (a self-loop stays intra wherever v goes, so it never scores a
+    * candidate but does count in the community total) and D′_C excludes v
+    * itself when C is v's current community; movers adopt their argmax
+    * (ties to the smaller community id) simultaneously.
+    *
     * Only nodes with (id + round) even move each round — the standard
     * distributed-Louvain symmetry breaker: fully synchronous moves make
     * adjacent pairs swap communities forever (two-coloring oscillation);
     * the deterministic parity alternation lets each side settle against
     * the other's fixed state. Fixed `rounds` for determinism (the
     * Graphalytics-cdlp discipline; the DuckDB oracle unrolls the same
-    * rounds, parity rule included).
-    * One-level only — full Louvain coarsens between levels; use
-    * [[modularity]] to score the result. Scale shape per round: one
-    * community-degree aggregate, one map-side-combined neighbor-community
-    * count, a struct-max argmax — no windows over the graph, no driver
-    * state in the loop. Input: canonical (a, b); returns (id, community). */
-  def louvainMoves(undirected: DataFrame, rounds: Int): DataFrame = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    val (e, small) = LocalKernels.gate(undirected.select(col("a"), col("b")))
-    if (small) LocalKernels.louvainMoves(e, rounds)
-    else louvainMovesDistributed(e, rounds)
-  }
-
-  private[graft] def louvainMovesDistributed(undirected: DataFrame, rounds: Int): DataFrame = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    val und = undirected.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    val sym = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
+    * rounds, parity rule included). All weights are integer-valued
+    * doubles, so every sum is exact below 2^53 and the oracle's rounds
+    * match bitwise. Scale shape per round: one community-degree
+    * aggregate, one map-side-combined neighbor-community sum, a
+    * struct-max argmax — no windows over the graph, no driver state in
+    * the loop. `und` must be a materialized leaf (it is read by every
+    * round's m2); `capture` names the round body for [[RoundCapture]].
+    * Returns (id, community). */
+  private def louvainRounds(und: DataFrame, rounds: Int, capture: String): DataFrame = {
+    val sym = und.filter(col("a") =!= col("b"))
+      .unionAll(und.filter(col("a") =!= col("b"))
+        .select(col("b").as("a"), col("a").as("b"), col("w")))
       .localCheckpoint(true) // consumed by deg and every round's k aggregate
-    val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
+    val deg = sym.select(col("a").as("id"), col("w"))
+      .unionAll(und.filter(col("a") === col("b"))
+        .select(col("a").as("id"), (col("w") * 2).as("w")))
+      .groupBy(col("id")).agg(sum(col("w")).as("d"))
       .localCheckpoint(true)
-    val m2 = und.agg((count(lit(1)) * 2).cast("double").as("m2"))
+    val m2 = und.agg((sum(col("w")) * 2).as("m2")) // contraction preserves 2m
     var asg = deg.select(col("id"), col("id").as("community"))
     // FIXPOINT early-exit (same argument as kCore's): after TWO
     // consecutive no-move rounds both parities have settled against an
@@ -624,9 +637,9 @@ object Algorithms {
     while (r <= rounds && stable < 2) {
       val dc = asg.join(deg, Seq("id"))
         .groupBy(col("community").as("C")).agg(sum(col("d")).as("dc"))
-      val nbrC = sym.select(col("a").as("id"), col("b").as("nb"))
+      val nbrC = sym.select(col("a").as("id"), col("b").as("nb"), col("w"))
         .join(asg.select(col("id").as("nb"), col("community").as("C")), Seq("nb"))
-        .groupBy(col("id"), col("C")).agg(count(lit(1)).cast("double").as("k"))
+        .groupBy(col("id"), col("C")).agg(sum(col("w")).as("k"))
       // the current community is always a candidate, even with no
       // neighbors left in it (k = 0) — max(k) merges the duplicate
       val cand = nbrC
@@ -645,121 +658,13 @@ object Algorithms {
           when(pmod(col("id") + r, lit(2L)) === 0, -col("__m.nc"))
             .otherwise(col("__cur")).as("community"),
           col("__cur").as("__was"))
-      RoundCapture.offer("louvain_moves", r, next.drop("__was"))
+      RoundCapture.offer(capture, r, next.drop("__was"))
       val ck = next.localCheckpoint(true)
       stable = if (ck.filter(col("community") =!= col("__was")).limit(1).isEmpty)
         stable + 1 else 0
       asg = ck.drop("__was")
       lastLouvainMoveRounds = r
       r += 1
-    }
-    asg
-  }
-
-  /** WEIGHTED Louvain local-move rounds — the level ≥ 2 engine of
-    * [[louvain]] over a CONTRACTED multigraph: input is canonical
-    * (a ≤ b, parallel edges pre-merged) weighted pairs, self-loops
-    * (a = b) allowed. Same synchronous rounds, same parity symmetry
-    * breaker and smaller-community tie-break as [[louvainMoves]], with
-    * the standard weighted quantities: k_{v,C} = Σ w to members of C,
-    * deg(v) = Σ incident w + 2·selfloop(v) (a self-loop stays intra
-    * wherever v goes, so it never scores a candidate but does count in
-    * the community total). All weights here are integer-valued doubles
-    * (edge counts), so every sum is exact below 2^53 and the DuckDB
-    * oracle's unrolled rounds match bitwise. Returns (id, community). */
-  private[graft] def louvainMovesWeighted(weighted: DataFrame, rounds: Int): DataFrame = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    val und = weighted.select(col("a"), col("b"), col("w").cast("double").as("w"))
-      .localCheckpoint(true) // consumed by sym, deg's self part, and m2
-    val sym = und.filter(col("a") =!= col("b"))
-      .unionAll(und.filter(col("a") =!= col("b"))
-        .select(col("b").as("a"), col("a").as("b"), col("w")))
-      .localCheckpoint(true) // consumed by deg and every round's k aggregate
-    val deg = sym.select(col("a").as("id"), col("w"))
-      .unionAll(und.filter(col("a") === col("b"))
-        .select(col("a").as("id"), (col("w") * 2).as("w")))
-      .groupBy(col("id")).agg(sum(col("w")).as("d"))
-      .localCheckpoint(true)
-    val m2 = und.agg((sum(col("w")) * 2).as("m2")) // contraction preserves 2m
-    var asg = deg.select(col("id"), col("id").as("community"))
-    // same two-no-move-round fixpoint early-exit as the unweighted twin
-    var stable = 0
-    var r = 1
-    while (r <= rounds && stable < 2) {
-      val dc = asg.join(deg, Seq("id"))
-        .groupBy(col("community").as("C")).agg(sum(col("d")).as("dc"))
-      val nbrC = sym.select(col("a").as("id"), col("b").as("nb"), col("w"))
-        .join(asg.select(col("id").as("nb"), col("community").as("C")), Seq("nb"))
-        .groupBy(col("id"), col("C")).agg(sum(col("w")).as("k"))
-      val cand = nbrC
-        .unionByName(asg.select(col("id"), col("community").as("C"), lit(0.0).as("k")))
-        .groupBy(col("id"), col("C")).agg(max(col("k")).as("k"))
-      val scored = cand
-        .join(asg, Seq("id")).join(deg, Seq("id")).join(dc, Seq("C"))
-        .crossJoin(broadcast(m2))
-        .select(col("id"), col("community"), col("C"),
-          (col("k") - col("d") * when(col("C") === col("community"),
-            col("dc") - col("d")).otherwise(col("dc")) / col("m2")).as("score"))
-      val next = scored.groupBy(col("id"))
-        .agg(max(struct(col("score"), (-col("C")).as("nc"))).as("__m"),
-          first(col("community")).as("__cur"))
-        .select(col("id"),
-          when(pmod(col("id") + r, lit(2L)) === 0, -col("__m.nc"))
-            .otherwise(col("__cur")).as("community"),
-          col("__cur").as("__was"))
-      RoundCapture.offer("louvain_weighted", r, next.drop("__was"))
-      val ck = next.localCheckpoint(true)
-      stable = if (ck.filter(col("community") =!= col("__was")).limit(1).isEmpty)
-        stable + 1 else 0
-      asg = ck.drop("__was")
-      lastLouvainMoveRounds = r
-      r += 1
-    }
-    asg
-  }
-
-  /** Multi-LEVEL Louvain (Blondel et al. 2008, the operator people mean
-    * by "Louvain"): run [[louvainMoves]]' local rounds, then COARSEN —
-    * contract each community to a super-node, sum parallel edges to
-    * weights (intra-community edges become self-loops), run
-    * [[louvainMovesWeighted]] local rounds on the contracted graph — and
-    * repeat for `levels` levels; each original node maps to its top-level
-    * community. `levels = 1` is exactly [[louvainMoves]]. Deterministic
-    * end to end (fixed rounds per level, parity symmetry breaking, min-id
-    * tie-breaks), so the DuckDB oracle unrolls both levels.
-    *
-    * Scale shape: contraction is one double-endpoint assignment join +
-    * one hash aggregate over the edge set — the same shape as
-    * [[modularity]]'s intra join — and each level's graph is no larger
-    * (typically far smaller) than the last; no windows over the graph,
-    * no driver state. Beyond-parity: the reference's community surface
-    * is CDLP only (`src/algo/community.rs`). Input: canonical (a, b);
-    * returns (id, community). */
-  def louvain(undirected: DataFrame, rounds: Int, levels: Int): DataFrame = {
-    require(levels > 0, s"levels must be positive, got $levels")
-    val (e, small) = LocalKernels.gate(undirected.select(col("a"), col("b")))
-    if (small) LocalKernels.louvain(e, rounds, levels)
-    else louvainDistributed(e, rounds, levels)
-  }
-
-  private[graft] def louvainDistributed(undirected: DataFrame, rounds: Int,
-                                        levels: Int): DataFrame = {
-    require(levels > 0, s"levels must be positive, got $levels")
-    val und = undirected.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    var asg = louvainMovesDistributed(und, rounds)
-    for (_ <- 2 to levels) {
-      val g2 = und
-        .join(asg.select(col("id").as("a"), col("community").as("__ca")), Seq("a"))
-        .join(asg.select(col("id").as("b"), col("community").as("__cb")), Seq("b"))
-        .groupBy(least(col("__ca"), col("__cb")).as("a"),
-          greatest(col("__ca"), col("__cb")).as("b"))
-        .agg(count(lit(1)).cast("double").as("w"))
-      val up = louvainMovesWeighted(g2, rounds)
-        .select(col("id").as("__lvl"), col("community").as("__c2"))
-      asg = asg.join(up, asg("community") === up("__lvl"))
-        .select(col("id"), col("__c2").as("community"))
-        .localCheckpoint(true) // consumed by the next contraction + result
     }
     asg
   }

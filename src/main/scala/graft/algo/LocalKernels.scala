@@ -35,7 +35,7 @@ import scala.collection.mutable
   * Routes: the [[Algorithms]] entry points pageRank, pageRankWeighted,
   * personalizedPageRank, hits, wcc, cdlp, scc, kCore, bfs, sssp, ssspPath,
   * bidirectionalBfs, harmonic/closeness/betweenness centrality, louvain,
-  * louvainMoves, mst, node2vecWalks and jaccardSimilarityApprox consult
+  * mst, node2vecWalks and jaccardSimilarityApprox consult
   * [[gate]]; triangleCount and lcc consult [[gateSuperlinear]]; the
   * variable-length expansions in `graft.operators.Traversals` route here too.
   */
@@ -378,44 +378,92 @@ object LocalKernels {
 
   // ---- kernels ----------------------------------------------------------
 
-  /** Damped power iteration with dangling-mass redistribution — same
-    * update as [[Algorithms.pageRank]]'s distributed loop, same float
-    * association `(1-d)/n + d*(recv + dmass/n)`. */
+  /** Global PageRank — [[Algorithms.pageRank]]'s update
+    * `(1-d)/n + d*(recv + dmass/n)` over [[powerIteration]]. */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-        val (si, di) = (sb.result(), db.result())
+        val (vx, si, di) = internEdges(it)
         val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val m = si.length
-          val deg = new Array[Int](n)
-          var k = 0
-          while (k < m) { deg(si(k)) += 1; k += 1 }
-          var rank = Array.fill(n)(1.0 / n)
-          var iter = 0
-          while (iter < iterations) {
-            var dmass = 0.0
-            var i = 0
-            while (i < n) { if (deg(i) == 0) dmass += rank(i); i += 1 }
-            val recv = new Array[Double](n)
-            k = 0
-            while (k < m) { recv(di(k)) += rank(si(k)) / deg(si(k)); k += 1 }
-            val nr = new Array[Double](n)
-            i = 0
-            while (i < n) {
-              nr(i) = (1 - damping) / n + damping * (recv(i) + dmass / n); i += 1
-            }
-            rank = nr; iter += 1
-          }
-          (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
-        }
+        val rank = powerIteration(n, si, di, null, iterations, Array.fill(n)(1.0 / n),
+          globalRank(n, damping))
+        (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
       }.toDF("id", "rank")
+  }
+
+  /** Global PageRank's update, `(1-d)/n + d*(recv + dmass/n)`. */
+  private def globalRank(n: Int, d: Double): RankRule =
+    (_, recv, dmass) => (1 - d) / n + d * (recv + dmass / n)
+
+  /** Interns an edge stream into dense (src, dst) index arrays. */
+  private def internEdges(it: Iterator[(Long, Long)]): (Interner, Array[Int], Array[Int]) = {
+    val vx = new Interner
+    val sb = new Ints(); val db = new Ints()
+    it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
+    (vx, sb.result(), db.result())
+  }
+
+  /** Interns an edge stream and drops repeated (src, dst) pairs — the
+    * distributed twins' `distinct`. Indices follow first appearance in the
+    * stream; the pairs come out sorted by (src index, dst index). Dedup is
+    * pack → sort → unique (r15: a boxed mutable.HashSet[Long] on packed
+    * keys measured ~µs per insert — same pathology as the Louvain
+    * contraction's LongMap; one Arrays.sort replaces 2M hash inserts). */
+  private def internDistinctEdges(it: Iterator[(Long, Long)])
+      : (Interner, Array[Int], Array[Int]) = {
+    val vx = new Interner
+    val keys = new Longs()
+    it.foreach { case (s, d) =>
+      keys += (vx.idx(s).toLong << 32) | (vx.idx(d).toLong & 0xffffffffL)
+    }
+    val ks = uniqueSorted(keys.toArray)
+    val si = new Array[Int](ks.length); val di = new Array[Int](ks.length)
+    var k = 0
+    while (k < ks.length) { si(k) = (ks(k) >>> 32).toInt; di(k) = ks(k).toInt; k += 1 }
+    (vx, si, di)
+  }
+
+  /** A power-iteration round's per-vertex update: the new rank of vertex
+    * `i` from the mass it received and the round's dangling mass. A
+    * primitive single-method trait, so the per-vertex call does not box
+    * (Scala's Function3 is not specialized). */
+  private trait RankRule { def apply(i: Int, recv: Double, dmass: Double): Double }
+
+  /** The in-task power iteration behind pageRank, pageRankWeighted and
+    * personalizedPageRank — the same rounds as [[Algorithms]]' distributed
+    * loop: a vertex sends rank/W(u)·w(e) along each out-edge (W its
+    * out-weight), dangling mass is the rank of vertices with W = 0, and
+    * `rule` gives the new rank. `w == null` means unit weights — exactly
+    * the doubles of an array of 1.0 (x/W·1.0 == x/W, Σ1.0 == count) with
+    * no array materialized. */
+  private def powerIteration(n: Int, si: Array[Int], di: Array[Int], w: Array[Double],
+                             iterations: Int, rank0: Array[Double],
+                             rule: RankRule): Array[Double] = {
+    val m = si.length
+    val outW = new Array[Double](n)
+    var k = 0
+    while (k < m) { outW(si(k)) += (if (w == null) 1.0 else w(k)); k += 1 }
+    var rank = rank0
+    var iter = 0
+    while (iter < iterations) {
+      var dmass = 0.0
+      var i = 0
+      while (i < n) { if (outW(i) == 0.0) dmass += rank(i); i += 1 }
+      val recv = new Array[Double](n)
+      k = 0
+      while (k < m) {
+        val c = rank(si(k)) / outW(si(k))
+        recv(di(k)) += (if (w == null) c else c * w(k))
+        k += 1
+      }
+      val nr = new Array[Double](n)
+      i = 0
+      while (i < n) { nr(i) = rule(i, recv(i), dmass); i += 1 }
+      rank = nr; iter += 1
+    }
+    rank
   }
 
   /** Shared in-task truncated directed BFS from one seed over a CSR.
@@ -454,10 +502,7 @@ object LocalKernels {
     val sd = seeds.distinct
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-      val vx = new Interner
-      val sb = new Ints(); val db = new Ints()
-      it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-      val (si, di) = (sb.result(), db.result())
+      val (vx, si, di) = internEdges(it)
       val n = vx.n
       val (off, tgt) = csr(n, si, di)
       sd.iterator.map { s =>
@@ -481,10 +526,7 @@ object LocalKernels {
     val sd = seeds.distinct
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-      val vx = new Interner
-      val sb = new Ints(); val db = new Ints()
-      it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-      val (si, di) = (sb.result(), db.result())
+      val (vx, si, di) = internEdges(it)
       val n = vx.n
       val (off, tgt) = csr(n, si, di)
       sd.iterator.map { s =>
@@ -515,20 +557,7 @@ object LocalKernels {
     val sd = seeds.distinct
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-      // directed dedup as pack → sort → unique (r15: a boxed
-      // mutable.HashSet[Long] on packed keys measured ~µs per insert —
-      // same pathology as the Louvain contraction's LongMap; one
-      // Arrays.sort replaces 2M hash inserts)
-      val vx = new Interner
-      val keys = new Longs()
-      it.foreach { case (s, d) =>
-        keys += (vx.idx(s).toLong << 32) | (vx.idx(d).toLong & 0xffffffffL)
-      }
-      val ks = uniqueSorted(keys.toArray)
-      val sb = new Ints(); val db = new Ints()
-      var ki = 0
-      while (ki < ks.length) { sb += (ks(ki) >>> 32).toInt; db += ks(ki).toInt; ki += 1 }
-      val (si, di) = (sb.result(), db.result())
+      val (vx, si, di) = internDistinctEdges(it)
       val n = vx.n
       val (off, tgt) = csr(n, si, di)
       val bc = new Array[Double](n)
@@ -574,11 +603,9 @@ object LocalKernels {
     }.toDF("id", "bc")
   }
 
-  /** Weighted PageRank — identical per-round float association to
-    * [[Algorithms.pageRankWeighted]]'s distributed loop:
-    * recv(v) += (rank(u)/W(u))·w(e), rank' = (1−d)/n + d·(recv + dmass/n);
-    * weight ≤ 0 edges dropped (not an edge), dangling = zero surviving
-    * out-weight. */
+  /** Weighted PageRank — [[Algorithms.pageRankWeighted]]'s update over
+    * [[powerIteration]] with per-edge weights; weight ≤ 0 edges dropped
+    * (not an edge), dangling = zero surviving out-weight. */
   def pageRankWeighted(edges: DataFrame, iterations: Int, damping: Double): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -587,34 +614,12 @@ object LocalKernels {
       .as[(Long, Long, Double)]
     inTask3(srcDs, cacheKey(srcDs.toDF())) { it =>
       val vx = new Interner
-      val sb = new Ints(); val db = new Ints(); val wb = mutable.ArrayBuffer.empty[Double]
+      val sb = new Ints(); val db = new Ints(); val wb = mutable.ArrayBuilder.make[Double]
       it.foreach { case (s, d, w) => sb += vx.idx(s); db += vx.idx(d); wb += w }
-      val (si, di, w) = (sb.result(), db.result(), wb.toArray)
       val n = vx.n
-      if (n == 0) Iterator.empty
-      else {
-        val m = si.length
-        val outW = new Array[Double](n)
-        var k = 0
-        while (k < m) { outW(si(k)) += w(k); k += 1 }
-        var rank = Array.fill(n)(1.0 / n)
-        var iter = 0
-        while (iter < iterations) {
-          var dmass = 0.0
-          var i = 0
-          while (i < n) { if (outW(i) == 0.0) dmass += rank(i); i += 1 }
-          val recv = new Array[Double](n)
-          k = 0
-          while (k < m) { recv(di(k)) += (rank(si(k)) / outW(si(k))) * w(k); k += 1 }
-          val nr = new Array[Double](n)
-          i = 0
-          while (i < n) {
-            nr(i) = (1 - damping) / n + damping * (recv(i) + dmass / n); i += 1
-          }
-          rank = nr; iter += 1
-        }
-        (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
-      }
+      val rank = powerIteration(n, sb.result(), db.result(), wb.result(), iterations,
+        Array.fill(n)(1.0 / n), globalRank(n, damping))
+      (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
     }.toDF("id", "rank")
   }
 
@@ -626,20 +631,7 @@ object LocalKernels {
     import spark.implicits._
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-      // directed dedup as pack → sort → unique (r15: a boxed
-      // mutable.HashSet[Long] on packed keys measured ~µs per insert —
-      // same pathology as the Louvain contraction's LongMap; one
-      // Arrays.sort replaces 2M hash inserts)
-      val vx = new Interner
-      val keys = new Longs()
-      it.foreach { case (s, d) =>
-        keys += (vx.idx(s).toLong << 32) | (vx.idx(d).toLong & 0xffffffffL)
-      }
-      val ks = uniqueSorted(keys.toArray)
-      val sb = new Ints(); val db = new Ints()
-      var ki = 0
-      while (ki < ks.length) { sb += (ks(ki) >>> 32).toInt; db += ks(ki).toInt; ki += 1 }
-      val (si, di) = (sb.result(), db.result())
+      val (vx, si, di) = internDistinctEdges(it)
       val n = vx.n
       if (n == 0) Iterator.empty
       else {
@@ -669,9 +661,10 @@ object LocalKernels {
     }.toDF("id", "hub", "auth")
   }
 
-  /** Personalized PageRank — identical per-round arithmetic to
-    * [[Algorithms.personalizedPageRank]]: teleport AND dangling mass go to
-    * the seed set, non-seed restart is zero. */
+  /** Personalized PageRank — [[Algorithms.personalizedPageRank]]'s update
+    * `(seed ? (1-d)/ns + d*dmass/ns : 0) + d*recv` over [[powerIteration]]:
+    * teleport AND dangling mass go to the seed set, non-seed restart is
+    * zero. */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
                            iterations: Int, damping: Double): DataFrame = {
     val spark = edges.sparkSession
@@ -679,39 +672,16 @@ object LocalKernels {
     val seedSet = seeds.toSet
     val src = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(src, cacheKey(src.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
-        val (si, di) = (sb.result(), db.result())
+        val (vx, si, di) = internEdges(it)
         val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val m = si.length
-          val deg = new Array[Int](n)
-          var k = 0
-          while (k < m) { deg(si(k)) += 1; k += 1 }
-          val isSeed = Array.tabulate(n)(i => seedSet.contains(vx.ids(i)))
-          val ns = seedSet.size.toDouble // dedup: teleport share per distinct seed
-          var rank = Array.tabulate(n)(i => if (isSeed(i)) 1.0 / ns else 0.0)
-          var iter = 0
-          while (iter < iterations) {
-            var dmass = 0.0
-            var i = 0
-            while (i < n) { if (deg(i) == 0) dmass += rank(i); i += 1 }
-            val recv = new Array[Double](n)
-            k = 0
-            while (k < m) { recv(di(k)) += rank(si(k)) / deg(si(k)); k += 1 }
-            val nr = new Array[Double](n)
-            i = 0
-            while (i < n) {
-              nr(i) = (if (isSeed(i)) (1 - damping) / ns + damping * dmass / ns
-                       else 0.0) + damping * recv(i)
-              i += 1
-            }
-            rank = nr; iter += 1
-          }
-          (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
-        }
+        val isSeed = Array.tabulate(n)(i => seedSet.contains(vx.ids(i)))
+        val ns = seedSet.size.toDouble // dedup: teleport share per distinct seed
+        val rank = powerIteration(n, si, di, null, iterations,
+          Array.tabulate(n)(i => if (isSeed(i)) 1.0 / ns else 0.0),
+          (i, recv, dmass) =>
+            (if (isSeed(i)) (1 - damping) / ns + damping * dmass / ns else 0.0) +
+              damping * recv)
+        (0 until n).iterator.map(i => (vx.ids(i), rank(i)))
       }.toDF("id", "rank")
   }
 
@@ -825,11 +795,9 @@ object LocalKernels {
     import spark.implicits._
     val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-      val vx = new Interner
-      val es = new Ints(); val ed = new Ints()
-      it.foreach { case (s, d) => es += vx.idx(s); ed += vx.idx(d) }
+      val (vx, es, ed) = internEdges(it)
       val n = vx.n
-      val (off, adj) = csr(n, es.result(), ed.result())
+      val (off, adj) = csr(n, es, ed)
       val index = Array.fill(n)(-1)
       val low = new Array[Int](n)
       val onStack = new Array[Boolean](n)
@@ -946,12 +914,10 @@ object LocalKernels {
     import spark.implicits._
     val srcDs = edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
     inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val sb = new Ints(); val db = new Ints()
-        it.foreach { case (s, d) => sb += vx.idx(s); db += vx.idx(d) }
+        val (vx, si, di) = internEdges(it)
         val src = vx.idx(source) // ensure present even with no incident edges
         val n = vx.n
-        val (off, tgt) = csr(n, sb.result(), db.result())
+        val (off, tgt) = csr(n, si, di)
         val dist = Array.fill(n)(-1)
         dist(src) = 0
         var frontier = Array(src)
@@ -1312,48 +1278,15 @@ object LocalKernels {
 
   // ---- Louvain ----------------------------------------------------------
 
-  /** One level of Louvain local moves — the in-task twin of
-    * [[Algorithms.louvainMovesDistributed]], term for term: synchronous
-    * rounds (all scores against the PREVIOUS round's assignment), score
-    * `k − (d·dcx)/m2` with dcx = dc−d for the current community, argmax by
-    * (score, then smaller community LABEL), and the (id + round) parity
-    * move rule. All inputs are integer-valued (k and d are neighbor
-    * counts, dc an integer sum), so the double expressions are EXACT and
-    * summation-order-free — the kernel's labels are bit-identical to the
-    * distributed twin's (LocalKernelsSpec differentials). */
-  def louvainMoves(edges: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val srcDs = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)]
-    inTask2(srcDs, cacheKey(srcDs.toDF())) { it =>
-        val vx = new Interner
-        val keys = new Longs()
-        // mirror the distributed dedup: DISTINCT raw (a, b) pairs, a != b
-        it.foreach { case (a, b) =>
-          if (a != b)
-            keys += (vx.idx(a).toLong << 32) | (vx.idx(b).toLong & 0xffffffffL)
-        }
-        val n = vx.n
-        if (n == 0) Iterator.empty
-        else {
-          val ks = uniqueSorted(keys.toArray)
-          val (off, nbr) = pairCsr(n, ks)
-          val ids = vx.ids.toArray
-          val comm = louvainRoundsUnweighted(n, off, nbr, ids, 2.0 * ks.length, rounds)
-          (0 until n).iterator.map(i => (ids(i), ids(comm(i))))
-        }
-      }.toDF("id", "community")
-  }
-
   /** Multi-level Louvain — the in-task twin of [[Algorithms.louvain]]:
-    * level-1 local moves, then per level one contraction (community-pair
-    * counts, least/greatest canonicalization, intra edges as self-loops)
-    * and WEIGHTED local moves over the contracted graph, with the
-    * node→top-level mapping composed at the end. Contracted weights are
-    * pair COUNTS (integer-valued doubles), so the weighted score
-    * arithmetic stays exact — same parity argument as the distributed
-    * oracle relies on. */
+    * level-1 local moves over the DISTINCT raw (a, b) pairs, a != b (the
+    * distributed dedup) with unit weights, then per level one contraction
+    * (community-pair counts, least/greatest canonicalization, intra edges
+    * as self-loops) and the same moves over the contracted graph, with
+    * the node→top-level mapping composed at the end. Every weight is an
+    * integer-valued double, so the score arithmetic stays exact — the
+    * labels are bit-identical to the distributed twin's
+    * (LocalKernelsSpec differentials). */
   def louvain(edges: DataFrame, rounds: Int, levels: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1372,7 +1305,8 @@ object LocalKernels {
           val ks = uniqueSorted(keys.toArray)
           val (off, nbr) = pairCsr(n, ks)
           val ids = vx.ids.toArray
-          var comm = louvainRoundsUnweighted(n, off, nbr, ids, 2.0 * ks.length, rounds)
+          val deg = Array.tabulate(n)(i => (off(i + 1) - off(i)).toDouble)
+          var comm = louvainRounds(n, off, nbr, null, deg, ids, 2.0 * ks.length, rounds)
           var lvl = 2
           while (lvl <= levels) {
             // contraction over the DISTINCT pair set: (least, greatest) of
@@ -1423,7 +1357,7 @@ object LocalKernels {
               p = q
             }
             val (off2, nbr2, w2) = pairCsrW(n2, sb.result(), db.result(), wb.result())
-            val up = louvainRoundsWeighted(n2, off2, nbr2, w2, deg2, ids2, 2.0 * m2w, rounds)
+            val up = louvainRounds(n2, off2, nbr2, w2, deg2, ids2, 2.0 * m2w, rounds)
             // compose: node's community label -> contracted node -> its label
             val next = new Array[Int](n)
             val liftIdx = new Array[Int](n2) // contracted comm idx -> level-1 comm idx of that LABEL
@@ -1488,72 +1422,18 @@ object LocalKernels {
     (off, tgt, w)
   }
 
-  /** Synchronous unweighted local-move rounds. deg = incidence count; k
-    * counts neighbors per community; score = k − (d·dcx)/m2 with LONG
-    * products (the distributed expression's exact type path). */
-  private def louvainRoundsUnweighted(n: Int, off: Array[Int], nbr: Array[Int],
-                                      ids: Array[Long], m2: Double,
-                                      rounds: Int): Array[Int] = {
-    val deg = new Array[Long](n)
-    var i = 0
-    while (i < n) { deg(i) = (off(i + 1) - off(i)).toLong; i += 1 }
-    var comm = Array.tabulate(n)(identity)
-    val dc = new Array[Long](n)
-    val cnt = new Array[Long](n)
-    val touched = new Ints()
-    var r = 1
-    while (r <= rounds) {
-      java.util.Arrays.fill(dc, 0L)
-      i = 0
-      while (i < n) { dc(comm(i)) += deg(i); i += 1 }
-      val next = new Array[Int](n)
-      var v = 0
-      while (v < n) {
-        if (java.lang.Math.floorMod(ids(v) + r, 2L) != 0L) next(v) = comm(v)
-        else {
-          touched.n = 0
-          var k = off(v)
-          while (k < off(v + 1)) {
-            val c = comm(nbr(k))
-            if (cnt(c) == 0L) touched += c
-            cnt(c) += 1L
-            k += 1
-          }
-          val cur = comm(v); val d = deg(v)
-          if (cnt(cur) == 0L) touched += cur // k = 0 candidate
-          var bestC = -1; var bestScore = 0.0; var bestLabel = 0L
-          var t = 0
-          while (t < touched.n) {
-            val c = touched(t)
-            val dcx = if (c == cur) dc(c) - d else dc(c)
-            val score = cnt(c).toDouble - (d * dcx).toDouble / m2
-            val label = ids(c)
-            if (bestC < 0 || score > bestScore ||
-              (score == bestScore && label < bestLabel)) {
-              bestC = c; bestScore = score; bestLabel = label
-            }
-            t += 1
-          }
-          // clear scratch
-          t = 0
-          while (t < touched.n) { cnt(touched(t)) = 0L; t += 1 }
-          next(v) = bestC
-        }
-        v += 1
-      }
-      comm = next
-      r += 1
-    }
-    comm
-  }
-
-  /** Synchronous WEIGHTED local-move rounds (contracted levels): k and d
-    * are weight sums — integer-valued doubles here (pair counts), so the
-    * sums are exact and order-free, matching the distributed twin. */
-  private def louvainRoundsWeighted(n: Int, off: Array[Int], nbr: Array[Int],
-                                    w: Array[Double], deg: Array[Double],
-                                    ids: Array[Long], m2: Double,
-                                    rounds: Int): Array[Int] = {
+  /** Synchronous local-move rounds — [[Algorithms.louvain]]'s rounds term
+    * for term: all scores against the PREVIOUS round's assignment, score
+    * `k − (d·dcx)/m2` with dcx = dc−d for the current community, argmax by
+    * (score, then smaller community LABEL), and the (id + round) parity
+    * move rule. k and d are weight sums — integer-valued doubles (unit
+    * weights at level 1, pair counts above), so the sums are exact and
+    * order-free, matching the distributed twin. `w == null` means unit
+    * weights, with no array materialized. */
+  private def louvainRounds(n: Int, off: Array[Int], nbr: Array[Int],
+                            w: Array[Double], deg: Array[Double],
+                            ids: Array[Long], m2: Double,
+                            rounds: Int): Array[Int] = {
     var comm = Array.tabulate(n)(identity)
     val dc = new Array[Double](n)
     val cnt = new Array[Double](n)
@@ -1574,7 +1454,7 @@ object LocalKernels {
           while (k < off(v + 1)) {
             val c = comm(nbr(k))
             if (!seen(c)) { seen(c) = true; touched += c }
-            cnt(c) += w(k)
+            cnt(c) += (if (w == null) 1.0 else w(k))
             k += 1
           }
           val cur = comm(v); val d = deg(v)

@@ -552,8 +552,7 @@ final class Translator(g: PropertyGraph, params: Map[String, Any] = Map.empty,
       case "algo.louvain" | "algo.louvainmoves" =>
         val rounds = confNum(Seq("rounds", "maxIterations"), numArg(0, 2)).toInt
         val levels = confNum(Seq("levels"), numArg(1, 1)).toInt
-        if (levels <= 1) Algorithms.louvainMoves(und, rounds)
-        else Algorithms.louvain(und, rounds, levels)
+        Algorithms.louvain(und, rounds, math.max(levels, 1))
       case "algo.node2vec" =>
         Algorithms.node2vecWalks(
           und.select(col("a").as("src"), col("b").as("dst")),

@@ -396,7 +396,7 @@ object GraphQueries {
     // 2 fixed rounds) — community detection by modularity gain, beyond
     // cdlp's frequency rule; the oracle unrolls the identical rounds
     "q_louvain_moves" -> ((s, d) =>
-      Algorithms.louvainMoves(copurchaseShared(s, d), 2).orderBy(col("id"))),
+      Algorithms.louvain(copurchaseShared(s, d), 2, 1).orderBy(col("id"))),
 
     // MULTI-LEVEL Louvain: local moves, community contraction (parallel
     // edges summed, intra edges to self-loops), weighted moves on the
@@ -1186,12 +1186,11 @@ object GraphQueries {
     sb.toString
   }
 
-  /** CDLP as `iters` chained CTEs: argmax neighbor-label frequency, ties to
-    * the minimum label (row_number over count DESC, label ASC). */
   /** Louvain local-move rounds as unrolled CTEs — mirrors
-    * [[graft.algo.Algorithms.louvainMoves]] term for term (the score
-    * expression `k - d * dcx / m2` keeps the same operator shape so the
-    * doubles match exactly; argmax = row_number over (score DESC, cc)). */
+    * [[graft.algo.Algorithms.louvain]] with `levels = 1` term for term
+    * (the score expression `k - d * dcx / m2` keeps the same operator
+    * shape so the doubles match exactly; argmax = row_number over
+    * (score DESC, cc)). */
   private def louvainOracle(rounds: Int): String =
     louvainOracleOver(CopurchaseCte +
       ", e AS (SELECT a AS src, b AS dst FROM pe UNION ALL SELECT b, a FROM pe)" +
@@ -1201,11 +1200,11 @@ object GraphQueries {
     * `${p}c1..${p}c$rounds` from `${p}c0` over symmetrized edges
     * `$e(src, dst[, w])`, degrees `$deg(id, d)` and the shared scalar
     * CTE m2; `kExpr` is the neighbor-community mass aggregate
-    * (count for the unweighted level 1, weight sum for contracted
-    * levels). Mirrors [[graft.algo.Algorithms.louvainMoves]] /
-    * [[graft.algo.Algorithms.louvainMovesWeighted]] term for term (the
-    * score `k - d * dcx / m2` keeps the same operator shape so the
-    * doubles match exactly; argmax = row_number over (score DESC, cc)).
+    * (count for the unweighted level 1 — the engine's sum of unit
+    * weights, the same double — weight sum for contracted levels).
+    * Mirrors the rounds of [[graft.algo.Algorithms.louvain]] term for
+    * term (the score `k - d * dcx / m2` keeps the same operator shape so
+    * the doubles match exactly; argmax = row_number over (score DESC, cc)).
     * Round CTEs are MATERIALIZED: each round references the previous
     * round 3-4 times, so DuckDB's default inlining re-expands the whole
     * prior-round tree per reference — exponential in rounds×levels (the
@@ -1279,6 +1278,8 @@ object GraphQueries {
       ", e AS (SELECT a AS src, b AS dst FROM pe UNION ALL SELECT b, a FROM pe)" +
       ", ecnt AS (SELECT count(*) AS n FROM pe)", "pe", rounds)
 
+  /** CDLP as `iters` chained CTEs: argmax neighbor-label frequency, ties to
+    * the minimum label (row_number over count DESC, label ASC). */
   private def cdlpOracle(iters: Int): String = {
     val sb = new StringBuilder(CopurchaseCte)
     sb.append(", e AS (SELECT a AS src, b AS dst FROM pe UNION ALL SELECT b, a FROM pe)")

@@ -228,18 +228,13 @@ class AlgorithmsSpec extends SparkSpec {
     val barbell = (clique(1L to 4L) ++ clique(7L to 10L) ++
       Seq((4L, 5L), (5L, 6L), (6L, 7L))).toDF("a", "b")
     for ((g, name) <- Seq((twoTri, "two-triangle"), (barbell, "barbell"))) {
-      val q1 = Algorithms.modularity(g, Algorithms.louvainMoves(g, 2))
+      val q1 = Algorithms.modularity(g, Algorithms.louvain(g, 2, 1))
         .head().getDouble(0)
       val q2 = Algorithms.modularity(g, Algorithms.louvain(g, 2, 2))
         .head().getDouble(0)
       assert(q2 > q1, s"$name: two-level Q=$q2 not above one-level Q=$q1")
     }
-    // levels = 1 is exactly louvainMoves, and the result is deterministic
-    val a1 = Algorithms.louvain(twoTri, 2, 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val m1 = Algorithms.louvainMoves(twoTri, 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a1 == m1)
+    // deterministic across runs
     val r1 = Algorithms.louvain(barbell, 2, 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val r2 = Algorithms.louvain(barbell, 2, 2).collect()
@@ -284,21 +279,33 @@ class AlgorithmsSpec extends SparkSpec {
     // two triangles + bridge — the natural 2-community split
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
       .toDF("a", "b")
-    // synchronous moves from singletons pair up first (a matching-like
-    // round), so triangle consolidation needs a few rounds — 4 suffices
-    val asg = Algorithms.louvainMoves(e, 4)
-    val q = Algorithms.modularity(e, asg).head().getDouble(0)
     val nodes = (1L to 6L).map(v => (v, v)).toDF("id", "community")
     val q0 = Algorithms.modularity(e, nodes).head().getDouble(0)
-    assert(q > q0, s"moves did not improve modularity: $q vs singleton $q0")
-    // each triangle collapses into one community
-    val m = asg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m(1L) == m(2L) && m(2L) == m(3L), s"left triangle split: $m")
-    assert(m(4L) == m(5L) && m(5L) == m(6L), s"right triangle split: $m")
-    // deterministic across runs
-    val m2 = Algorithms.louvainMoves(e, 4).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m == m2)
+    onBothRoutes { route =>
+      // synchronous moves from singletons pair up first (a matching-like
+      // round), so triangle consolidation needs a few rounds — 4 suffices
+      val asg = Algorithms.louvain(e, 4, 1)
+      val q = Algorithms.modularity(e, asg).head().getDouble(0)
+      assert(q > q0, s"$route: moves did not improve modularity: $q vs singleton $q0")
+      // each triangle collapses into one community
+      val m = asg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(m(1L) == m(2L) && m(2L) == m(3L), s"$route: left triangle split: $m")
+      assert(m(4L) == m(5L) && m(5L) == m(6L), s"$route: right triangle split: $m")
+      // deterministic across runs
+      val m2 = Algorithms.louvain(e, 4, 1).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(m == m2, route)
+    }
+  }
+
+  test("louvain: rounds <= 0 is rejected on both routes") {
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("a", "b")
+    onBothRoutes { route =>
+      for (rounds <- Seq(0, -1); levels <- Seq(1, 2))
+        withClue(s"$route rounds=$rounds levels=$levels: ") {
+          intercept[IllegalArgumentException](Algorithms.louvain(e, rounds, levels))
+        }
+    }
   }
 
   test("louvainMoves: distributed fixpoint early-exit fires on a converged graph, result identical") {
@@ -310,9 +317,9 @@ class AlgorithmsSpec extends SparkSpec {
       .toDF("a", "b")
     spark.conf.set("spark.graft.algo.localSizeBytes", "0") // pin distributed
     try {
-      val at4 = Algorithms.louvainMoves(e, 4).collect()
+      val at4 = Algorithms.louvain(e, 4, 1).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val at12 = Algorithms.louvainMoves(e, 12).collect()
+      val at12 = Algorithms.louvain(e, 12, 1).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(at4 == at12, "early-exit changed the converged assignment")
       assert(Algorithms.lastLouvainMoveRounds < 12,

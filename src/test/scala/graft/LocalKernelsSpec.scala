@@ -142,21 +142,16 @@ class LocalKernelsSpec extends SparkSpec {
   }
 
   test("louvainMoves local == distributed (exact labels)") {
+    // one-level louvain: the level-1 move rounds over unit weights
     for (seed <- Seq(11L, 12L, 13L)) {
       val e = randGraph(seed, 30, 120).toDF("a", "b")
-      val loc = sortedRows(LocalKernels.louvainMoves(e, 3))
-      spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-      val dist = try sortedRows(Algorithms.louvainMoves(e, 3))
-      finally spark.conf.unset("spark.graft.algo.localSizeBytes")
-      assert(loc.toSeq == dist.toSeq, s"seed $seed")
+      val loc = sortedRows(LocalKernels.louvain(e, 3, 1))
+      assert(loc === distributed(Algorithms.louvain(e, 3, 1)), s"seed $seed")
     }
     // BOTH pair orientations present (the distributed distinct keeps both)
     val bi = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("a", "b")
-    val lb = sortedRows(LocalKernels.louvainMoves(bi, 2))
-    spark.conf.set("spark.graft.algo.localSizeBytes", "0")
-    val db2 = try sortedRows(Algorithms.louvainMoves(bi, 2))
-    finally spark.conf.unset("spark.graft.algo.localSizeBytes")
-    assert(lb.toSeq == db2.toSeq)
+    assert(sortedRows(LocalKernels.louvain(bi, 2, 1)) ===
+      distributed(Algorithms.louvain(bi, 2, 1)))
   }
 
   test("louvain multi-level local == distributed (exact labels)") {
@@ -204,6 +199,18 @@ class LocalKernelsSpec extends SparkSpec {
       assert(loc.keySet == dist.keySet, s"seed $seed")
       loc.foreach { case (id, r) =>
         assert(math.abs(r - dist(id)) < 1e-9, s"id $id seed $seed") }
+    }
+  }
+
+  test("pageRankWeighted with unit weights returns exactly the rows of pageRank, both routes") {
+    // unit weights are exact: (rank/W)*1.0 == rank/deg and sum(1.0) == count
+    for (seed <- Seq(2L, 15L, 16L)) {
+      val e = randGraph(seed, 40, 150) // parallel edges, self-loops, dangling nodes
+      val unit = e.withColumn("weight", lit(1.0))
+      assert(sortedRows(LocalKernels.pageRankWeighted(unit, 8, 0.85)) ===
+        sortedRows(LocalKernels.pageRank(e, 8, 0.85)), s"in-task seed $seed")
+      assert(distributed(Algorithms.pageRankWeighted(unit, 8, 0.85)) ===
+        distributed(Algorithms.pageRank(e, 8, 0.85)), s"distributed seed $seed")
     }
   }
 
